@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE short JSON line (the driver tail-captures stdout — round 1
@@ -80,27 +79,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Join strategy (optimization guide §3.1/§9, scale-neutral): let
-      // the planner pick shuffled-hash over sort-merge when its size
-      // conditions hold (skips both sort passes), and let AQE rewrite
-      // a planned SMJ to SHJ at runtime when every post-shuffle
-      // partition's map output is under the threshold — a decision
-      // made from ACTUAL sizes, so it adapts with scale instead of
-      // betting on estimates.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
     val qs = SparkEntry.queries
     def time(name: String): Double = {
       val t0 = System.nanoTime()
@@ -132,7 +111,7 @@ object Bench {
     // Reported alongside the 1-core gauge (`calib_mc`, `value_norm_mc`);
     // the 1-core `calib`/`value_norm` keep their round-12 reference
     // semantics so cross-round comparisons stay valid.
-    val nCores = math.max(1, cpus.toInt)
+    val nCores = spark.sparkContext.defaultParallelism
     def calibMc(): Double = {
       val t0 = System.nanoTime()
       spark.range(0L, 50000000L * nCores, 1L, nCores)

@@ -32,20 +32,15 @@ object ClusterSmoke {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName("cluster-smoke")
-      .config("spark.home", home)
+    val spark = GraftSession("cluster-smoke",
+      "spark.master" -> "local-cluster[2,1,1024]",
+      "spark.home" -> home,
       // executors need the library classes: derive the path from THIS
       // class's code source so the tool works from any checkout
-      .config("spark.executor.extraClassPath",
+      "spark.executor.extraClassPath" ->
         new java.io.File(getClass.getProtectionDomain.getCodeSource
-          .getLocation.toURI).getAbsolutePath)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+          .getLocation.toURI).getAbsolutePath,
+      "spark.executor.extraJavaOptions" -> addOpens)
     import spark.implicits._
 
     // GRAFT_SMOKE_ONLY=<substring> runs just the matching checks — a
@@ -276,8 +271,7 @@ object ClusterSmoke {
         extra: Map[String, String] = Map.empty): Process = {
       val env = Map(
         "GRAFT_DATA_DIR" -> s"$root/$tag",
-        "GRAFT_MASTER" -> "local[2]",
-        "GRAFT_SHUFFLE_PARTITIONS" -> "2",
+        "SPARK_GRAFT_CPUS" -> "2",
         "GRAFT_STEP_SEC" -> "10",
         "GRAFT_HEARTBEAT_SEC" -> "7200",
         "GRAFT_GRAPHITE_PORT" -> gPort.toString,
@@ -551,8 +545,7 @@ object ClusterSmoke {
         extra: Map[String, String]): Process = {
       val env = Map(
         "GRAFT_DATA_DIR" -> s"$root/$tag",
-        "GRAFT_MASTER" -> "local[2]",
-        "GRAFT_SHUFFLE_PARTITIONS" -> "2",
+        "SPARK_GRAFT_CPUS" -> "2",
         "GRAFT_STEP_SEC" -> "10",
         "GRAFT_HEARTBEAT_SEC" -> "7200",
         "GRAFT_GRAPHITE_PORT" -> gPort.toString,
@@ -789,8 +782,7 @@ object ClusterSmoke {
         extra: Map[String, String]): Process = {
       val env = Map(
         "GRAFT_DATA_DIR" -> s"$root/$tag",
-        "GRAFT_MASTER" -> "local[2]",
-        "GRAFT_SHUFFLE_PARTITIONS" -> "2",
+        "SPARK_GRAFT_CPUS" -> "2",
         "GRAFT_STEP_SEC" -> "10",
         "GRAFT_HEARTBEAT_SEC" -> "7200",
         "GRAFT_GRAPHITE_PORT" -> gPort.toString,
@@ -1064,8 +1056,7 @@ object ClusterSmoke {
         extra: Map[String, String]): Process = {
       val env = Map(
         "GRAFT_DATA_DIR" -> s"$root/$tag",
-        "GRAFT_MASTER" -> "local[2]",
-        "GRAFT_SHUFFLE_PARTITIONS" -> "2",
+        "SPARK_GRAFT_CPUS" -> "2",
         "GRAFT_STEP_SEC" -> "10",
         "GRAFT_HEARTBEAT_SEC" -> "7200",
         "GRAFT_GRAPHITE_PORT" -> gPort.toString,
@@ -1313,8 +1304,7 @@ object ClusterSmoke {
     def daemon(tag: String, i: Int, gPort: Int): Process = {
       val env = Map(
         "GRAFT_DATA_DIR" -> s"$root/$tag",
-        "GRAFT_MASTER" -> "local[2]",
-        "GRAFT_SHUFFLE_PARTITIONS" -> "2",
+        "SPARK_GRAFT_CPUS" -> "2",
         "GRAFT_STEP_SEC" -> "10",
         "GRAFT_GRAPHITE_PORT" -> gPort.toString,
         // only the graphite ports are dialed a priori (the peer list
@@ -1512,8 +1502,7 @@ object ClusterSmoke {
         shard: Option[(Int, Int, String)]): Process = {
       val env = Map(
         "GRAFT_DATA_DIR" -> s"$root/$tag",
-        "GRAFT_MASTER" -> "local[2]",
-        "GRAFT_SHUFFLE_PARTITIONS" -> "2",
+        "SPARK_GRAFT_CPUS" -> "2",
         "GRAFT_STEP_SEC" -> "10",
         "GRAFT_GRAPHITE_PORT" -> gPort.toString,
         // non-dialed surfaces bind EPHEMERAL; the /stats ports are

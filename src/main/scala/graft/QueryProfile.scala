@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Wall-vs-job-time profiler for registered queries — the gauge that
   * separates EXECUTOR-bound time (real work in Spark jobs) from
@@ -19,20 +18,7 @@ object QueryProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOG", "ERROR"))
+    val spark = GraftSession("graft-query-profile")
     val jobNanos = new AtomicLong
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     // GRAFT_PROF_JOBS=1: per-job lines (duration + callsite description)

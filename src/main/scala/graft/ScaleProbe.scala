@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.Blaster
 import graft.ts.{SeriesOps => O}
@@ -9,35 +8,42 @@ import graft.rrd.Consolidate
 /** Scale probe (dev main): generate a Blaster corpus ~1000× the sf0.1
   * fixture and time the core operator chain — evidence that the plan
   * shapes hold when the data no longer fits a single task. Row counts
-  * and timings print as one JSON line. Run:
-  * `SPARK_GRAFT_PROBE_ROWS=100000000 sbt "runMain graft.ScaleProbe"`. */
+  * and timings print as one JSON line, with the session's effective
+  * cpus and join settings. Optional arguments are stage-name prefixes:
+  * only the matching stages run, and only the corpora they use are
+  * built. Run: `SPARK_GRAFT_PROBE_ROWS=100000000 sbt "runMain
+  * graft.ScaleProbe [stage …]"`. */
 object ScaleProbe {
+  /** One timed stage: label, seconds, rows. */
+  type Stage = (String, Double, Long)
+
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_PROBE_ROWS", "100000000").toLong
     val nSeries = sys.env.getOrElse("SPARK_GRAFT_PROBE_SERIES", "1000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-scale-probe")
+    val wanted: String => Boolean =
+      if (args.isEmpty) _ => true else label => args.exists(label.startsWith)
 
-    val pts = Blaster.generate(spark, nSeries, rows / nSeries)
+    lazy val pts = Blaster.generate(spark, nSeries, rows / nSeries)
       .select(col("name"), col("tsSec").as("ts"), col("value"))
 
-    def time(label: String)(f: => Long): (String, Double, Long) = {
+    def timed(label: String)(f: => Long): Stage = {
       val t0 = System.nanoTime()
       val n = f
       (label, math.rint((System.nanoTime() - t0) / 1e6) / 1e3, n)
     }
+    def time(label: String)(f: => Long): Seq[Stage] =
+      if (wanted(label)) Seq(timed(label)(f)) else Nil
+    /** A block of stages and their untimed setup, run when any of
+      * `labels` is selected. */
+    def only(labels: String*)(body: => Seq[Stage]): Seq[Stage] =
+      if (labels.exists(wanted)) body else Nil
 
     // ---- pipeline-scale corpora (deterministic, generated in-plan) ----
     // documents: odd ids are near-dups of the preceding even id (one
     // positional word differs) — ~nDocs/2 planted near-dup pairs
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_PROBE_DOCS", "200000").toLong
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"),
+    lazy val docs = spark.range(nDocs).select(col("id").as("doc_id"),
       concat_ws(" ", transform(sequence(lit(0), lit(39)), j =>
         when(j === pmod(col("id"), lit(40)) && col("id") % 2 === 1,
           substring(md5(col("id").cast("string")), 1, 6))
@@ -46,21 +52,23 @@ object ScaleProbe {
         .as("text"))
     // embeddings: 64-dim deterministic noise (xxhash64 — probe-only)
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_PROBE_VECS", "1000000").toLong
-    val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
+    lazy val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(63)), j =>
         (pmod(xxhash64(col("id"), j), lit(2001)) - 1000).cast("double") / 1000.0)
         .as("embedding"))
     val nKeys = sys.env.getOrElse("SPARK_GRAFT_PROBE_KEYS", "10000000").toLong
-    val keys = spark.range(nKeys).select(col("id").as("doc_id"))
+    lazy val keys = spark.range(nKeys).select(col("id").as("doc_id"))
 
     // published two-level index (nVecs vectors, K = 128·64 = 8192)
     // shared by the increment and serve stages below; the build is
     // deployment-cadence setup (nightly), not part of either timed
     // window — the build itself is timed as two_level_kmeans_1m_k8192
-    val semDir = java.nio.file.Files
-      .createTempDirectory("sem-pub-probe").toString
-    pipeline.Similarity.publishTwoLevelIndex(vecs, semDir,
-      coarseK = 128, fineK = 64, coarseIters = 1, fineIters = 1)
+    lazy val semDir = {
+      val d = java.nio.file.Files.createTempDirectory("sem-pub-probe").toString
+      pipeline.Similarity.publishTwoLevelIndex(vecs, d,
+        coarseK = 128, fineK = 64, coarseIters = 1, fineIters = 1)
+      d
+    }
 
     var driftJson = """{}""" // filled by the semdedup_stream_drift stage
     var compactJson = """{}""" // filled by merge_cadence_compaction
@@ -268,7 +276,7 @@ object ScaleProbe {
       time("pack_sequences_200k") { // two-level prefix sum + chunk
         pipeline.Curation.packSequences(docs, 2048).count()
       },
-      {
+      only("phash_dedup_20k_images") {
         // perceptual image dedup at media scale: 20k real PNG images
         // (64-160 px) + their perturbed twins — encode, decode, hash,
         // band-join, verify; every planted twin must pair up
@@ -287,7 +295,7 @@ object ScaleProbe {
           n
         }
       },
-      {
+      only("sessionize_10m") {
         // event-log sessionization at the design point: 10M events /
         // 100k users spread over 30 days, 1h-gap sessions — ONE
         // user_id shuffle carries both windows and the reassembly
@@ -321,7 +329,7 @@ object ScaleProbe {
             .as("source"))
         pipeline.Curation.sourceCap(skewed, 1000, "probe").count()
       },
-      {
+      only("watch_union_10m") {
         // live view: 10M-slot archive ∪ in-flight state. The archive
         // side must stay scan→union (no shuffle); only the
         // micro-batch-sized pending side aggregates, and the collision
@@ -399,7 +407,7 @@ object ScaleProbe {
           s"realized K collapsed: ${census.getLong(0)} of 8192")
         census.getLong(0)
       },
-      {
+      only("semdedup_skew_1m") {
         // degenerate SKEW at scale: 50% of the 1M vectors near-identical
         // (flat SemDeDup's all-pairs death). The hash-cap must bound
         // every dedup self-join cell ON THE OPERATOR'S OWN assignment,
@@ -429,7 +437,7 @@ object ScaleProbe {
           n
         }
       },
-      {
+      only("hw_forecast_10k_series") {
         // Holt-Winters at BREADTH: 10k series × 1k points, one series
         // per flatMapGroups task — the design point never exercised
         // many series concurrently. Fixed (α,β,γ) isolates the group
@@ -450,7 +458,7 @@ object ScaleProbe {
             devScale = 3.0, show = "smooth,conf", stepSec = 60).count()
         }
       },
-      {
+      only("semdedup_increment_100k_vs_1m") {
         // incremental semantic dedup at the design point: a 100k batch
         // against 1M published survivors. The increment must pay ONLY
         // the delta (assignment of 100k + cluster-confined store
@@ -483,7 +491,7 @@ object ScaleProbe {
         }
         r
       },
-      {
+      only("two_level_serve_1m_k8192") {
         // TWO-LEVEL SERVING at the design point (1M vectors, K=8192,
         // published index): a query descends √K coarse → probed cells
         // only, never the K-wide centroid set. In-stage census: with k
@@ -509,13 +517,10 @@ object ScaleProbe {
           s"candidate set $maxCand exceeds the probed-cell bound $topCellMass")
         require(maxCand <= nVecs / 10,
           s"candidate set $maxCand not sublinear in the $nVecs corpus")
-        val r = time("two_level_serve_1m_k8192") {
+        time("two_level_serve_1m_k8192") {
           pipeline.Similarity.topKIvfTwoLevelServe(spark, semDir,
             queries, 10, probeCoarse = pc, probeFine = pf).count()
         }
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(semDir))
-        r
       },
       time("unimax_mixture_10m") { // 1000-strata water-fill (S-row
         // window) + map-side mixture realization over 10M keys
@@ -539,7 +544,7 @@ object ScaleProbe {
         require(n == nDocs, s"nb_quality scored $n of $nDocs docs")
         n
       },
-      {
+      only("select_200k") {
         val srcDocs = docs.withColumn("source",
           concat(lit("s"), pmod(col("doc_id"), lit(20))))
         time("select_200k") { // the full cu_select composition: three
@@ -549,7 +554,7 @@ object ScaleProbe {
           val n = out.count(); release(); n
         }
       },
-      {
+      only("pipeline_stream_200k_4b") {
         // the COMPOSED streaming pipeline at the design point: the
         // 200k corpus lands as 4 micro-batches through BOTH
         // accumulation stages (near-dup increment + doc-local scores,
@@ -578,7 +583,7 @@ object ScaleProbe {
           n
         }
       },
-      {
+      only("heavy_hitters_10m") {
         // 30% one hot token, the rest ~7M-distinct tail: the regime
         // where exact counting must shuffle the whole tail
         val toks = keys.select(
@@ -617,7 +622,7 @@ object ScaleProbe {
           .groupBy(col("source")).agg(hll_union_agg(col("hll")).as("hll"))
           .select(hll_sketch_estimate(col("hll"))).count()
       },
-      {
+      only("quantile_sketch_10m") {
         // quantile tier at the same point: per-source p50/p99 over 10M
         // values, EVERY ONE DISTINCT (the regime where exact
         // percentile's value→count state grows with the stream while
@@ -649,7 +654,7 @@ object ScaleProbe {
           .groupBy("source")
           .agg(expr("percentile(v, array(0.5, 0.99))").as("q")).count()
       },
-      {
+      only("snapshot_publish_compact_10m") {
         val dir = java.nio.file.Files.createTempDirectory("snapprobe").toString
         val r = time("snapshot_publish_compact_10m") { // atomic publish
           // of a 32-part corpus + bin-pack compaction to 4 files
@@ -661,7 +666,7 @@ object ScaleProbe {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
         r
       },
-      {
+      only("zorder_publish_10m") {
         val dir = java.nio.file.Files.createTempDirectory("zorderprobe").toString
         val r = time("zorder_publish_10m") { // quantile-bucketed Morton
           // layout over two independent dims, 64 files; the returned
@@ -683,7 +688,7 @@ object ScaleProbe {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
         r
       },
-      {
+      only("semdedup_stream_drift_1m") {
         // STREAMING SEMANTIC-DEDUP DRIFT LOOP at the design point —
         // DedupStreamSpec's engineered-drift construction scaled
         // ~30000×: bootstrap freezes the quantizer on distribution A
@@ -900,7 +905,10 @@ object ScaleProbe {
           new java.io.File(root))
         rowsC
       },
-      )
+      ).flatten
+    if (Seq("semdedup_increment_100k_vs_1m", "two_level_serve_1m_k8192")
+        .exists(wanted))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(semDir))
 
     // ---- LIVE-DAEMON SOAK: all four ingest surfaces + query load ----
     // Graphite (blaster), pickle frames and pixel data points union
@@ -922,7 +930,8 @@ object ScaleProbe {
     //    swap-atomic, StoreGen makes cache entries generation-exact),
     //    and the final served payload equals a fresh render.
     var soakLoadJson = """{}"""
-    val soakRows: Seq[(String, Double, Long)] = {
+    val soakRows = only("daemon_soak_rra", "soak_cross_gateway_union",
+        "soak_render_find_load") {
       import graft.streaming.{Daemon, Ingest, Pickle, Pixel}
       val soakRate = sys.env.getOrElse("SPARK_GRAFT_SOAK_RATE", "10000").toInt
       val soakSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_SEC", "60").toInt
@@ -1019,7 +1028,7 @@ object ScaleProbe {
         }, s"soak-client-$ci")
         t.setDaemon(true); t
       }
-      val rowMain = time("daemon_soak_rra") {
+      val rowMain = timed("daemon_soak_rra") {
         blaster.setNSeries(2000)
         blaster.setRate(soakRate)
         genThread.start()
@@ -1049,7 +1058,7 @@ object ScaleProbe {
         sent
       }
       // ---- cross-gateway union oracle ----
-      val rowUnion = time("soak_cross_gateway_union") {
+      val rowUnion = timed("soak_cross_gateway_union") {
         import spark.implicits._
         val gPts = Ingest.parseGraphite(
             capG.toArray(new Array[String](0)).toSeq.toDF("line"),
@@ -1099,7 +1108,7 @@ object ScaleProbe {
           (a.sum() / 2.5).toLong).sum()
       }
       // ---- query-load verdict: hit/miss split + zero stale ----
-      val rowLoad = time("soak_render_find_load") {
+      val rowLoad = timed("soak_render_find_load") {
         val all = samples.toArray(new Array[Sample](0)).toSeq
         require(all.nonEmpty, "query load produced no generation-stable 200s")
         // fixed-key kinds only (the relative viewport's key legitimately
@@ -1152,13 +1161,14 @@ object ScaleProbe {
     // drops, every stored series on its owning shard
     // (pmod(xxhash64(name), 2) in ONE plan), and the two-store UNION
     // ≡ batch re-consolidation of the exact lines sent.
-    val shardRows: Seq[(String, Double, Long)] = {
+    // 20k eps with ownership-independent entry ≈ half the lines
+    // cross the forwarding hop → ≥10k lines/s FORWARDED, the r12
+    // verdict's design-point for the async batched forwarder
+    val shardRate = sys.env.getOrElse("SPARK_GRAFT_SHARD_SOAK_RATE",
+      sys.env.getOrElse("SPARK_GRAFT_SOAK_RATE", "20000")).toInt
+    val shardRows = only(s"shard_ingest_2x_${shardRate}eps") {
       import graft.streaming.{Daemon, Ingest, Shard}
-      // 20k eps with ownership-independent entry ≈ half the lines
-      // cross the forwarding hop → ≥10k lines/s FORWARDED, the r12
-      // verdict's design-point for the async batched forwarder
-      val rate = sys.env.getOrElse("SPARK_GRAFT_SHARD_SOAK_RATE",
-        sys.env.getOrElse("SPARK_GRAFT_SOAK_RATE", "20000")).toInt
+      val rate = shardRate
       val sec = sys.env.getOrElse("SPARK_GRAFT_SHARD_SOAK_SEC", "30").toInt
       val dir = java.nio.file.Files.createTempDirectory("shard-soak").toString
       def freePort(): Int = {
@@ -1204,7 +1214,7 @@ object ScaleProbe {
         while (dt > cur && !maxOfferNanos.compareAndSet(cur, dt))
           cur = maxOfferNanos.get
       })
-      val row = time(s"shard_ingest_2x_${rate}eps") {
+      val row = timed(s"shard_ingest_2x_${rate}eps") {
         blaster.setNSeries(1000)
         blaster.setRate(rate)
         Thread.sleep(sec * 1000L)
@@ -1300,10 +1310,14 @@ object ScaleProbe {
     // double-counts — and no new store holds a series it doesn't own
     // at M=3. Archive data never moves: the old stores are byte-frozen
     // the moment the old fleet stops.
-    val reshardRows: Seq[(String, Double, Long)] = {
+    val reshardRate = sys.env.getOrElse("SPARK_GRAFT_RESHARD_RATE",
+      sys.env.getOrElse("SPARK_GRAFT_SOAK_RATE", "20000")).toInt
+    val bigSeries = sys.env.getOrElse("SPARK_GRAFT_RESHARD_SERIES",
+      "100000").toInt
+    val reshardRows = only(s"reshard_2to3_${reshardRate}eps",
+        "reshard_seed_write_8to12", s"reshard_8to12_${bigSeries}ser") {
       import graft.streaming.{Daemon, Ingest, Reshard, Shard}
-      val rate = sys.env.getOrElse("SPARK_GRAFT_RESHARD_RATE",
-        sys.env.getOrElse("SPARK_GRAFT_SOAK_RATE", "20000")).toInt
+      val rate = reshardRate
       val phaseSec = sys.env.getOrElse("SPARK_GRAFT_RESHARD_SEC", "12").toInt
       val dir = java.nio.file.Files.createTempDirectory("reshard").toString
       def freePort(): Int = {
@@ -1425,11 +1439,9 @@ object ScaleProbe {
       // in-stage bound), and the batch oracle must hold over the
       // resized union exactly as at 2 -> 3: zero gapped, zero doubled
       // slots.
-      val bigSeries = sys.env.getOrElse("SPARK_GRAFT_RESHARD_SERIES",
-        "100000").toInt
-      val bigRows: Seq[(String, Double, Long)] =
-        if (sys.env.get("SPARK_GRAFT_RESHARD_BIG").contains("0")) Seq.empty
-        else {
+      val bigRows =
+        if (sys.env.get("SPARK_GRAFT_RESHARD_BIG").contains("0")) Nil
+        else only("reshard_seed_write_8to12", s"reshard_8to12_${bigSeries}ser") {
           val cap2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
           val (gA, pkA, dA, qA) = fleet(8, "bo", None)
           blast(gA, phaseSec, bigSeries, cap2)
@@ -1437,7 +1449,7 @@ object ScaleProbe {
           dA.foreach(d => scala.util.Try(d.close()))
           (gA ++ pkA).foreach(g => scala.util.Try(g.close()))
           val seedPaths = (0 until 12).map(i => s"$dir/bseed$i")
-          val seedRow = time("reshard_seed_write_8to12") {
+          val seedRow = timed("reshard_seed_write_8to12") {
             Reshard.writeSeeds(spark,
               (0 until 8).map(i => s"$dir/bo$i/ckpt"), 12, seedPaths)
             spark.read.parquet(seedPaths: _*).count()
@@ -1445,7 +1457,7 @@ object ScaleProbe {
           require(seedRow._2 < 180.0,
             s"8->12 seed write took ${seedRow._2}s for ${seedRow._3} " +
               "series — not O(live series)")
-          val row2 = time(s"reshard_8to12_${bigSeries}ser") {
+          val row2 = timed(s"reshard_8to12_${bigSeries}ser") {
             val (gB, pkB, dB, qB) = fleet(12, "bn", Some(seedPaths))
             blast(gB, phaseSec, bigSeries, cap2)
             drainStop(qB)
@@ -1493,7 +1505,7 @@ object ScaleProbe {
           Seq(seedRow, row2)
         }
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      Seq(row) ++ bigRows
+      row ++ bigRows
     }
 
     // serving a published two-level index should amortize the build;
@@ -1501,18 +1513,28 @@ object ScaleProbe {
     // REPORTED (for the judge to diff) and only an order-of-magnitude
     // inversion — serve slower than 5 rebuilds — hard-fails
     val secOf = results.map(r => r._1 -> r._2).toMap
-    val serveVsBuild = secOf("two_level_serve_1m_k8192") /
-      math.max(1e-9, secOf("two_level_kmeans_1m_k8192"))
-    require(serveVsBuild <= 5.0,
-      s"serve ${secOf("two_level_serve_1m_k8192")}s is ${serveVsBuild}x " +
-        "the fused build — an inversion no co-tenant noise explains")
+    val serveVsBuild = for {
+      serve <- secOf.get("two_level_serve_1m_k8192")
+      build <- secOf.get("two_level_kmeans_1m_k8192")
+    } yield {
+      val ratio = serve / math.max(1e-9, build)
+      require(ratio <= 5.0, s"serve ${serve}s is ${ratio}x the fused " +
+        "build — an inversion no co-tenant noise explains")
+      math.rint(ratio * 1000) / 1000
+    }
 
     val json = (results ++ soakRows ++ shardRows ++ reshardRows)
       .map { case (l, sec, n) =>
         s""""$l":{"sec":$sec,"rows":$n}"""
       }.mkString("{", ",", "}")
+    val preferSmj = spark.conf.get("spark.sql.join.preferSortMergeJoin")
+      .trim.toBoolean
+    val shjLocalMap =
+      spark.conf.get("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")
     println(s"""{"probe_rows":$rows,"series":$nSeries,""" +
-      s""""serve_vs_build":${math.rint(serveVsBuild * 1000) / 1000},""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""prefer_smj":$preferSmj,"shj_localmap":"$shjLocalMap",""" +
+      s""""serve_vs_build":${serveVsBuild.getOrElse("null")},""" +
       s""""stream_drift":$driftJson,""" +
       s""""merge_cadence":$compactJson,""" +
       s""""soak_load":$soakLoadJson,"stages":$json}""")

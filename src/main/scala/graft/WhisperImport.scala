@@ -84,13 +84,7 @@ object WhisperImport {
     val (whisperDir, archiveDir) = (args(0), args(1))
     val root = if (args.length > 2) args(2) else whisperDir
     def env(k: String, d: String) = sys.env.getOrElse(k, d)
-    val spark = SparkSession.builder()
-      .master(env("GRAFT_MASTER", s"local[${env("GRAFT_CPUS", "4")}]"))
-      .appName("graft-whisper-import")
-      .config("spark.sql.shuffle.partitions", env("GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-whisper-import")
     val (nSeries, nSlots) = run(spark, whisperDir, root, archiveDir,
       prefix = env("GRAFT_PREFIX", ""),
       staleDays = env("GRAFT_STALE_DAYS", "0").toInt,

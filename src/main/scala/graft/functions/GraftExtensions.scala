@@ -12,9 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * hash family, [[graft.pipeline.Similarity]]'s hyperplanes) — the same
   * constants the DuckDB oracles replay.
   *
-  * Wire up with either
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
+  * Wire up with `withExtensions(new GraftExtensions)` on a session
+  * builder or `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =

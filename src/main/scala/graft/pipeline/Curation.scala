@@ -64,23 +64,6 @@ object Curation {
     bench.sparkSession.sparkContext.broadcast(a)
   }
 
-  /** [[benchGrams]] with the eval-gram frame persisted PLAN-KEYED and a
-    * release handle (round 17): the collect fires at CONSTRUCTION time
-    * on every re-construction (the bench's min-of-3 re-runs curate from
-    * scratch), so without the cache each one re-runs the bench-gram
-    * shingle pass. Eval-suite bounded. Scoped-only — the unscoped
-    * [[benchGrams]] stays cache-free so [[contamination]] keeps its
-    * no-session-state contract. */
-  private[graft] def benchGramsScoped(bench: DataFrame)
-      : (org.apache.spark.broadcast.Broadcast[Array[Long]], () => Unit) = {
-    val grams = Ckpt.persistOnce(
-      NearDup.shingles(bench).select(col("xh")).distinct())
-    val a = grams.collect().map(_.getLong(0))
-    java.util.Arrays.sort(a)
-    (bench.sparkSession.sparkContext.broadcast(a),
-      () => { grams.unpersist(); () })
-  }
-
   /** Cross-corpus contamination where the reference side is ITSELF a
     * large corpus — decontaminating a new crawl against an existing
     * training set, where [[contamination]]'s collected-set broadcast
@@ -1321,11 +1304,6 @@ object Curation {
         col("logw"))
   }
 
-  /** [[scoreTable]] published as an atomic [[Snapshot]] version —
-    * the materialization step itself. */
-  def scoreToSnapshot(docs: DataFrame, dir: String): Long =
-    Snapshot.publish(scoreTable(docs), dir)
-
   /** The DOC-LOCAL subset of [[scoreTable]]: quality, language id,
     * character entropy — every column a pure function of the one
     * document, which is what makes [[incrementalDocScores]] exact.
@@ -1778,7 +1756,7 @@ object Curation {
     // Two corpus-sized joins and a second corpus scan drop out.
     // decontamination: map-side membership count over the SAME persisted
     // set frame dedup uses — no exploded-gram shuffle (see contamination)
-    val (bg, bgRel) = benchGramsScoped(bench)
+    val bg = benchGrams(bench)
     val cOk = sets.select(col("doc_id"),
         size(col("hs")).cast("long").as("n"),
         graft.functions.HashExprs.countInSet(col("hs"), bg).as("nh"))
@@ -1812,7 +1790,7 @@ object Curation {
       .select(col("doc_id"), col("__csrc").as("source"),
         col("rn").cast("long").as("rn"),
         col("n_tok"), col("tok_start"), col("seq_id"), col("seq_pos"))
-    (out, () => { sets.unpersist(); members.unpersist(); bgRel()
+    (out, () => { sets.unpersist(); members.unpersist()
       survivors.unpersist()
       capped.unpersist(); () })
   }

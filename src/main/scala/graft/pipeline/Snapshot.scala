@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, NoSuchFileException, Paths}
 import java.util.UUID
 
 /** Versioned atomic parquet snapshots — the write side of the curation
@@ -62,20 +64,20 @@ object Snapshot {
 
   /** Latest committed version per the pointer, or None for an empty /
     * never-published dir. Uncommitted `v=` dirs (crash debris, racing
-    * writers) are invisible: only the pointer commits. */
+    * writers) are invisible: only the pointer commits. A local pointer
+    * is read through java.nio: every render-cache lookup reads it, and
+    * Hadoop's checksummed local stream costs several times the read.
+    * The pointer is one decimal line swung by rename; anything that
+    * does not parse reads as no pointer. */
   def latestVersion(spark: SparkSession, dir: String): Option[Long] = {
     val f = fs(spark, dir)
     val ptr = new Path(dir, Pointer)
-    if (!f.exists(ptr)) None
-    else {
-      val in = f.open(ptr)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0), StandardCharsets.UTF_8)
-          .trim.toLongOption
-      } finally in.close()
-    }
+    val bytes =
+      try Some(
+        if (f.getScheme == "file") Files.readAllBytes(Paths.get(f.makeQualified(ptr).toUri))
+        else { val in = f.open(ptr); try in.readNBytes(64) finally in.close() })
+      catch { case _: FileNotFoundException | _: NoSuchFileException => None }
+    bytes.flatMap(b => new String(b, StandardCharsets.UTF_8).trim.toLongOption)
   }
 
   /** Highest version DIRECTORY present, committed or not — the basis

@@ -439,15 +439,6 @@ object TextAnalysis {
     graft.functions.TextExprs.profileHits(tokens, Seq(stop)).getItem(0)
       .cast("double") / greatest(size(tokens), lit(1)).cast("double")
 
-  /** Interpreted-fold formulation of [[hitRatio]], kept for the
-    * PropertySpec equivalence check against the native expression. */
-  private[pipeline] def hitRatioHof(stop: Seq[String]): Column = {
-    val stopArr = array(stop.map(lit): _*)
-    aggregate(tokens, lit(0L),
-      (acc, t) => acc + when(array_contains(stopArr, t), 1L).otherwise(0L))
-      .cast("double") / greatest(size(tokens), lit(1)).cast("double")
-  }
-
   /** Length/punctuation/stopword quality features + a composite score —
     * the standard pre-training corpus filters (length bounds, symbol
     * ratios, stopword presence), deterministic and clamped to [0,1]. */

@@ -32,10 +32,6 @@ object Whisper {
       archives: Seq[ArchiveInfo])
   final case class Point(tsSec: Long, value: Double)
 
-  /** CF codes (`whisper.go:11`): 0 UNK, 1 AVG, 2 SUM, 3 LAST, 4 MAX, 5 MIN. */
-  val CfNames: Map[Int, String] =
-    Map(0 -> "unk", 1 -> "avg", 2 -> "sum", 3 -> "last", 4 -> "max", 5 -> "min")
-
   def readHeader(bytes: Array[Byte]): Header = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     val cf = bb.getInt

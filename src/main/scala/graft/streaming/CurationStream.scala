@@ -100,15 +100,7 @@ object CurationStream {
   def main(args: Array[String]): Unit = {
     def env(k: String) = sys.env.getOrElse(k,
       sys.error(s"$k is required"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("GRAFT_CPUS", "4")}]"))
-      .appName("graft-curation-stream")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-curation-stream")
     val q = startFromDir(spark, env("GRAFT_SCORE_IN"), env("GRAFT_SCORE_OUT"))
     println(s"curation-stream: scoring ${env("GRAFT_SCORE_IN")} -> " +
       s"${env("GRAFT_SCORE_OUT")}/scores")

@@ -877,6 +877,11 @@ object Daemon {
       archiveDirsDyn: Option[() => Seq[String]] = None): HttpServer = {
     def archiveDirs: Seq[String] =
       archiveDirsDyn.map(_()).getOrElse(archiveDirs0)
+    // The JDK server writes a response's headers and body apart. With
+    // Nagle on, the body waits for the client's delayed ACK of the
+    // headers, ~40 ms. The flag is read once, when the first server of
+    // the JVM is created.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     // Concurrent request dispatch — the reference's Go HTTP server runs
     // one goroutine per request and bounds only the render fan-out
@@ -1108,16 +1113,17 @@ object Daemon {
       // serve the wrong cached payload.
       val key = (targets :+ f.toString :+ u.toString :+ maxDp.toString :+
         graphType :+ pieMode).mkString("\u0000")
-      // pin the stores' snapshot states ONCE: the cache-key generation
-      // vector and the compute below read the same committed versions.
-      // The event store's change counter rides the vector ONLY for
-      // requests whose targets reference events() — so an events()
-      // render never serves stale after a new event lands, and a
-      // deploy-marker firehose does not evict every cached dashboard.
-      val states = archiveDirs.map(ArchiveStore.state(spark, _))
-      val gens = states.map(_.map(_.version).getOrElse(0L)) ++
-        (if (targets.exists(graft.dsl.Dsl.callsFunction(_, "events")))
-          events.map(_.version) else None)
+      // the cache-key generation vector is the stores' committed
+      // versions, so a hit reads only their pointers; a miss pins the
+      // snapshot states at exactly these versions. The event store's
+      // change counter rides the vector ONLY for requests whose targets
+      // reference events() — so an events() render never serves stale
+      // after a new event lands, and a deploy-marker firehose does not
+      // evict every cached dashboard.
+      val dirs = archiveDirs
+      val versions = dirs.map(ArchiveStore.version(spark, _))
+      val gens = versions ++ events.filter(_ =>
+        targets.exists(graft.dsl.Dsl.callsFunction(_, "events"))).map(_.version)
       renderCache.getOrCompute(key, gens) {
         // Cold render only: bounded at `renderConcurrency` concurrent
         // Spark jobs (BATCH_LIMIT parity). Cache hits and single-flight
@@ -1132,6 +1138,12 @@ object Daemon {
         // entry with a pre-commit vector no future request can observe
         // (versions are monotone): dead weight, never a stale serve.
         try {
+          // a version vacuumed since the pointer read falls back to the
+          // newest: fresher than the key, never stale
+          val states = dirs.zip(versions).map { case (d, v) =>
+            (if (v > 0) ArchiveStore.state(spark, d, Some(v)) else None)
+              .orElse(ArchiveStore.state(spark, d))
+          }
           // events frame: a driver-local annotations table (bounded,
           // human-scale) — built per cold render, cached like any body
           val evFrame = events.map { store =>
@@ -1140,7 +1152,7 @@ object Daemon {
             store.all().map(e => (e.when, e.tags)).toDF("when", "tags")
           }
           val ctx = Viewport.ctx(spark,
-            Ingest.readArchives(spark, archiveDirs, pinned = Some(states)),
+            Ingest.readArchives(spark, dirs, pinned = Some(states)),
             stepSec, from, until, nowS, maxDp).copy(events = evFrame)
           if (graphType == "pie") Render.renderPieTargets(ctx, targets, pieMode)
           else Render.renderTargets(ctx, targets)
@@ -1377,14 +1389,7 @@ object Daemon {
     def portOf(envKey: String, confPort: Option[Int], d: Int): Int =
       sys.env.get(envKey).map(_.toInt)
         .orElse(confPort).getOrElse(d)
-    val spark = SparkSession.builder()
-      .master(env("GRAFT_MASTER", "local[4]"))
-      .appName("graft-daemon")
-      .config("spark.sql.shuffle.partitions",
-        env("GRAFT_SHUFFLE_PARTITIONS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-daemon")
 
     // Ingest scale-out (cluster/cluster.go selectNodes + receiver/
     // director.go, re-expressed as the hash partition rule — see

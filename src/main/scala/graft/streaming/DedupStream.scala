@@ -137,14 +137,7 @@ object DedupStream {
       sys.error("GRAFT_DEDUP_IN (parquet landing dir) is required"))
     val out = sys.env.getOrElse("GRAFT_DEDUP_OUT",
       java.nio.file.Files.createTempDirectory("graft-dedup").toString)
-    val spark = SparkSession.builder()
-      .master(env("GRAFT_MASTER", "local[4]"))
-      .appName("graft-dedup-stream")
-      .config("spark.sql.shuffle.partitions",
-        env("GRAFT_SHUFFLE_PARTITIONS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-dedup-stream")
     val q = startFromDir(spark, in, out,
       env("GRAFT_DEDUP_MINJ", "0.8").toDouble)
     println(s"graft dedup stream: in=$in out=$out")

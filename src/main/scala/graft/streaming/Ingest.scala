@@ -358,19 +358,10 @@ object Ingest {
     * daemon keeps one store per ingest lifecycle). */
   object StoreLock {
     private val locks = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.locks.ReentrantReadWriteLock]
-    private def of(dir: String) = locks.computeIfAbsent(dir,
-      _ => new java.util.concurrent.locks.ReentrantReadWriteLock(true))
-    /** Retained for callers that want read-your-own-writes ordering
-      * against a same-JVM writer (waits out an in-flight mutation);
-      * NOT needed for consistency — reads are snapshot-pinned. */
-    def read[T](dirs: Seq[String])(f: => T): T = {
-      val ls = dirs.distinct.sorted.map(of)
-      ls.foreach(_.readLock().lock())
-      try f finally ls.reverse.foreach(_.readLock().unlock())
-    }
+      String, java.util.concurrent.locks.ReentrantLock]
     def write[T](dir: String)(f: => T): T = {
-      val l = of(dir).writeLock()
+      val l = locks.computeIfAbsent(dir,
+        _ => new java.util.concurrent.locks.ReentrantLock(true))
       l.lock()
       try f finally l.unlock()
     }

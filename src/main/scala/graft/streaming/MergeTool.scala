@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Out-of-process archive writer (dev/ops main): merge one piece into
   * a store from a SEPARATE JVM — the deployment shape the
   * [[ArchiveStore]] MVCC protocol exists for (ingest and serving in
@@ -17,13 +15,7 @@ object MergeTool {
     require(args.length == 6,
       "usage: MergeTool <archiveDir> <stepSec> <name> <t0> <t1> <value>")
     val Array(dir, step, name, t0, t1, v) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-merge-tool")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("graft-merge-tool")
     import spark.implicits._
     Ingest.mergePiecesIntoArchive(spark,
       Seq(Ingest.Piece(name, t0.toLong, t1.toLong, v.toDouble)).toDF(),

@@ -120,14 +120,7 @@ object PipelineStream {
       sys.error("GRAFT_PIPE_IN (parquet landing dir) is required"))
     val out = sys.env.getOrElse("GRAFT_PIPE_OUT",
       java.nio.file.Files.createTempDirectory("graft-pipe").toString)
-    val spark = SparkSession.builder()
-      .master(env("GRAFT_MASTER", "local[4]"))
-      .appName("graft-pipeline-stream")
-      .config("spark.sql.shuffle.partitions",
-        env("GRAFT_SHUFFLE_PARTITIONS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-pipeline-stream")
     val q = startFromDir(spark, in, out,
       env("GRAFT_PIPE_MINJ", "0.8").toDouble)
     println(s"graft pipeline stream: in=$in out=$out")

@@ -495,7 +495,7 @@ object Reshard {
     * stores never move at a resize, the old epoch's PRIMARY stores
     * stay read-only under the render union. Reuses a live session
     * when invoked in-process (and then does NOT stop it), builds its
-    * own under `GRAFT_MASTER`/`GRAFT_CPUS` when standalone. */
+    * own [[graft.GraftSession]] when standalone. */
   def main(args: Array[String]): Unit = {
     // `Reshard rolling M seedOut old1,old2 standby3 p1,p2,p3` — the
     // one-command LIVE resize over the admin control plane ([[rolling]]);
@@ -508,16 +508,9 @@ object Reshard {
       def csv(s: String): Seq[String] =
         if (s == "-") Seq.empty
         else s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      def env(k: String, d: String) = sys.env.getOrElse(k, d)
       val preExisting =
         SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      val spark = preExisting.getOrElse(SparkSession.builder()
-        .master(env("GRAFT_MASTER", s"local[${env("GRAFT_CPUS", "4")}]"))
-        .appName("graft-reshard-rolling")
-        .config("spark.sql.shuffle.partitions", env("GRAFT_CPUS", "4"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = preExisting.getOrElse(graft.GraftSession("graft-reshard-rolling"))
       rolling(spark, args(1).toInt, args(2), csv(args(3)), csv(args(4)),
         csv(args(5)).map(_.toInt),
         args.lift(6).map(csv(_).map(_.toInt)).getOrElse(Seq.empty))
@@ -530,16 +523,9 @@ object Reshard {
     require(newCount >= 1, s"newCount must be >= 1, got $newCount")
     val seedOut = args(1)
     val oldCkpts = args.drop(2).toSeq
-    def env(k: String, d: String) = sys.env.getOrElse(k, d)
     val preExisting =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = preExisting.getOrElse(SparkSession.builder()
-      .master(env("GRAFT_MASTER", s"local[${env("GRAFT_CPUS", "4")}]"))
-      .appName("graft-reshard")
-      .config("spark.sql.shuffle.partitions", env("GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = preExisting.getOrElse(graft.GraftSession("graft-reshard"))
     val seeds = (0 until newCount).map(i => s"$seedOut/$i")
     writeSeeds(spark, oldCkpts, newCount, seeds)
     val n = seeds.map(p => spark.read.parquet(p).count()).sum
